@@ -186,6 +186,74 @@ def test_lineage_partial_resume(spark, pages, tmp_path):
     assert lineage.resume_filter(pages, spark, lin, n_buckets=8).count() == 0
 
 
+@pytest.mark.parametrize("n_partitions, n_buckets", [(8, 4), (8, 8), (4, 8)])
+def test_lineage_bucket_is_salt_partition(spark, pages, n_partitions, n_buckets):
+    """The bucket is the salt partition modulo n_buckets when n divides P,
+    and the partition is the bucket modulo P when P divides n."""
+    from textractssmlprocessor_spark import lineage
+
+    chunks = lineage.with_bucket(
+        extract_chunks(pages.limit(200), num_partitions=n_partitions), n_buckets
+    ).select("bucket", F.spark_partition_id().alias("pid"))
+    modulus = min(n_partitions, n_buckets)
+    rows = chunks.collect()
+    assert len({r["bucket"] for r in rows}) == n_buckets
+    assert all(r["bucket"] % modulus == r["pid"] % modulus for r in rows)
+
+
+def test_lineage_aligned_write_one_file_per_bucket(spark, pages, tmp_path):
+    """With P == n_buckets each write task owns one bucket: one parquet
+    file per bucket directory, not one per (task, bucket) pair."""
+    from textractssmlprocessor_spark import lineage
+
+    out = tmp_path / "chunks_aligned"
+    lineage.run_with_lineage(
+        pages, spark, str(out), str(tmp_path / "lineage_aligned"),
+        n_buckets=8, num_partitions=8,
+    )
+    dirs = sorted(p for p in out.iterdir() if p.name.startswith("bucket="))
+    assert len(dirs) == 8
+    for d in dirs:
+        assert len(list(d.glob("part-*.parquet"))) == 1, d.name
+
+
+def test_lineage_rerun_with_every_bucket_done_starts_no_job(spark, pages, tmp_path):
+    """A rerun with nothing to do runs the lineage collect and nothing more:
+    no scan, UDF, write, read-back or lineage append."""
+    from textractssmlprocessor_spark import lineage
+
+    out, lin = str(tmp_path / "chunks_noop"), str(tmp_path / "lineage_noop")
+    lineage.run_with_lineage(pages, spark, out, lin, n_buckets=4, num_partitions=4)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group)), result
+
+    n_collect, _ = jobs_of(
+        "noop-collect",
+        lambda: lineage.completed_buckets(spark, lin).select("bucket").collect(),
+    )
+    metrics: dict = {}
+    n_rerun, rerun = jobs_of(
+        "noop-rerun",
+        lambda: lineage.run_with_lineage(
+            pages, spark, out, lin, n_buckets=4, num_partitions=4,
+            metrics_out=metrics,
+        ),
+    )
+    assert n_rerun == n_collect
+    assert metrics["n_chunks"] == 0
+    assert rerun.count() == 0
+    assert "bucket" in rerun.columns
+    assert spark.read.parquet(lin).count() == 4  # no lineage row appended
+
+
 def test_lineage_crash_between_write_and_lineage_is_idempotent(spark, pages, tmp_path):
     """Crash window: bucket data written but lineage row missing -> the
     rerun must REPLACE the partition, not append duplicates."""

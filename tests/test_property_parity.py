@@ -95,7 +95,10 @@ _ABBR_TEXT = st.lists(
     st.sampled_from(
         ["ibid.", "e.g.", "i.e.", "etc.", "cf.", "viz.", "vs.", "ca.", "fl.",
          "et al.", "ch. 3", "vol. 2", "p. 14", "pp. 14", "word", "P. 9",
-         "Etc.", "1 Corinthians", "II Samuel", "XIV", "I", "A.B.", "."]
+         "Etc.", "1 Corinthians", "II Samuel", "XIV", "I", "A.B.", ".",
+         # codepoints re.IGNORECASE folds onto (or next to) branch letters
+         "\u0130", "\u0131", "\u017f", "\u0307", "\u0131bid.", "\u0130.e.",
+         "v\u017f.", "\u0130\u0307.e.", "e\u0307.g."]
     ),
     min_size=0,
     max_size=40,

@@ -16,7 +16,7 @@ operators/   Spark DataFrame compositions + vectorized pandas/Arrow UDF
 corpus.py    deterministic synthetic web-page corpus (url, warc_ts, html,
              text, lang) for tests + benchmarks
 lineage.py   salted repartitioning, per-partition lineage rows,
-             checkpoint-resume anti-join
+             checkpoint-resume skip of done buckets
 """
 
 __version__ = "0.1.0"

@@ -8,7 +8,8 @@
         [--languages en,la] [--buckets 4096] [--partitions 16384]
 
 Resumable: reruns skip buckets recorded as done in the lineage table
-(anti-join on the broadcast lineage set). Designed for multi-executor
+(a filter on the done-bucket set read from the lineage table; a rerun with
+every bucket done does no other work). Designed for multi-executor
 clusters; the same code runs unchanged on local[N].
 """
 
@@ -43,8 +44,19 @@ def main() -> None:
     p.add_argument("--output", required=True)
     p.add_argument("--lineage", required=True)
     p.add_argument("--languages", default=None)
-    p.add_argument("--buckets", type=int, default=4096)
-    p.add_argument("--partitions", type=int, default=None)
+    p.add_argument(
+        "--buckets", type=int, default=4096,
+        help="lineage buckets (the resume and overwrite unit). Keep it a "
+        "multiple or a divisor of --partitions: each write task then owns "
+        "whole buckets and the job writes max(partitions, buckets) files "
+        "instead of up to partitions x buckets",
+    )
+    p.add_argument(
+        "--partitions", type=int, default=None,
+        help="salt partitions of the extraction shuffle (default 256, which "
+        "divides the default 4096 buckets); see --buckets for the alignment "
+        "rule",
+    )
     p.add_argument(
         "--input-format", default=None, choices=["iceberg", "parquet", "warc"],
         help="inferred from --input when omitted (existing path or "

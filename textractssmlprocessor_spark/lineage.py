@@ -3,27 +3,40 @@
 The reference's resume semantic is a global part counter skipping
 already-produced outputs (reference ssml_processing.py:106-110). At cluster
 scale that becomes: deterministically bucket documents by url hash, record a
-lineage row per completed bucket (counts + checksum), and on rerun anti-join
-completed buckets so only missing work re-executes. Writes are idempotent at
-bucket granularity (partitionBy(bucket) parquet overwrite per bucket).
+lineage row per completed bucket (counts + checksum), and on rerun filter
+out completed buckets so only missing work re-executes. Writes are
+idempotent at bucket granularity (partitionBy(bucket) parquet overwrite per
+bucket).
+
+The bucket is a function of the salt partition (operators.extract.
+salt_bucket), so with the partition count a multiple or a divisor of the
+bucket count every write task owns whole buckets: one file per bucket or
+per task, not one per (task, bucket) pair.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .fsutil import fs_exists
+from .operators.extract import DEFAULT_SALT_PARTITIONS, extract_chunks, salt_bucket
+from .schema import CHUNKS_SCHEMA
 
 N_BUCKETS_DEFAULT = 64
+# the chunk table as written: CHUNKS_SCHEMA plus its bucket partition column
+_WRITTEN_SCHEMA = StructType(
+    CHUNKS_SCHEMA.fields + [StructField("bucket", IntegerType(), True)]
+)
 
 
 def with_bucket(df: DataFrame, n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
-    """Stable url-hash bucket: pmod(xxhash64(url), n). The same salt key used
-    for repartitioning, so a bucket is co-located by construction."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
-    )
+    """Stable url-hash bucket: the salt partition of the url modulo n
+    (extract.salt_bucket). A bucket lies in whole salt partitions only when
+    the salt partition count is a multiple or a divisor of ``n_buckets``;
+    otherwise every partition may hold rows of every bucket."""
+    return df.withColumn("bucket", salt_bucket(n_buckets))
 
 
 def lineage_rows(chunks: DataFrame) -> DataFrame:
@@ -55,16 +68,28 @@ def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame:
     )
 
 
+def completed_bucket_ids(spark: SparkSession, lineage_path: str) -> set[int]:
+    """The done buckets, collected to the driver (the lineage table holds
+    at most one row per bucket)."""
+    rows = completed_buckets(spark, lineage_path).select("bucket").collect()
+    return {r["bucket"] for r in rows}
+
+
+def _skip_done(pages: DataFrame, done: set[int], n_buckets: int) -> DataFrame:
+    """Bucket the pages and drop the done buckets: a literal-set filter that
+    runs in the scan stage, before any shuffle."""
+    bucketed = with_bucket(pages, n_buckets)
+    if not done:
+        return bucketed
+    return bucketed.filter(~F.col("bucket").isin(sorted(done)))
+
+
 def resume_filter(
     pages: DataFrame, spark: SparkSession, lineage_path: str,
     n_buckets: int = N_BUCKETS_DEFAULT,
 ) -> DataFrame:
-    """Drop documents whose bucket already completed: broadcast anti-join on
-    the (tiny) lineage table — no shuffle of the big side."""
-    done = completed_buckets(spark, lineage_path).select("bucket")
-    return with_bucket(pages, n_buckets).join(
-        F.broadcast(done), on="bucket", how="left_anti"
-    )
+    """Drop documents whose bucket already completed."""
+    return _skip_done(pages, completed_bucket_ids(spark, lineage_path), n_buckets)
 
 
 def run_with_lineage(
@@ -86,23 +111,24 @@ def run_with_lineage(
     (Spark's Observation API — accumulator-backed, zero extra passes over
     the data; distinct aggregates aren't allowed there, hence the approx
     doc count). These are the job-level metrics; the durable per-bucket
-    counts/checksums live in the lineage rows."""
-    from .operators.extract import DEFAULT_SALT_PARTITIONS, extract_chunks
+    counts/checksums live in the lineage rows.
 
+    A run with every bucket already done returns before any Spark work
+    beyond the lineage read: zero metrics and an empty chunks frame."""
     # The buckets this run owns are knowable BEFORE any scan: every bucket
     # not yet recorded done in the (tiny) lineage table. Computing them
     # driver-side keeps the post-write read-back partition-PRUNED to this
     # run's buckets — re-reading the whole accumulated output and
     # anti-joining would scan 100 TB of prior runs to find this run's rows.
-    done = {
-        r["bucket"]
-        for r in completed_buckets(spark, lineage_path).select("bucket").collect()
-    }
+    done = completed_bucket_ids(spark, lineage_path)
     todo_buckets = [b for b in range(n_buckets) if b not in done]
-    todo = resume_filter(pages, spark, lineage_path, n_buckets)
+    if not todo_buckets:
+        if metrics_out is not None:
+            metrics_out.update(n_chunks=0, n_docs_approx=0, ssml_bytes=0)
+        return spark.createDataFrame([], _WRITTEN_SCHEMA)
     chunks = with_bucket(
         extract_chunks(
-            todo,
+            _skip_done(pages, done, n_buckets),
             languages=languages,
             num_partitions=num_partitions or DEFAULT_SALT_PARTITIONS,
         ),

@@ -42,6 +42,19 @@ def salted_repartition(df: DataFrame, num_partitions: int, key: str = "url") -> 
     return df.repartition(num_partitions, F.xxhash64(F.col(key)))
 
 
+def salt_bucket(n: int) -> Column:
+    """Url-hash bucket in [0, n) aligned with ``salted_repartition``:
+    pmod(hash(xxhash64(url)), n).
+
+    Spark's hash partitioning sends a row of ``salted_repartition(df, P)``
+    to partition pmod(murmur3(xxhash64(url)), P), and ``F.hash`` is that
+    same Murmur3 with seed 42. So whenever P % n == 0, the bucket is the
+    partition id modulo n, and whenever n % P == 0, the partition id is the
+    bucket modulo P: either way each task owns whole buckets, and a write
+    partitioned by bucket emits max(P, n) files instead of up to P * n."""
+    return F.pmod(F.hash(F.xxhash64(F.col("url"))), F.lit(n)).cast("int")
+
+
 def clean_pages(
     df: DataFrame,
     languages: list[str] | None = None,

@@ -20,9 +20,9 @@ from __future__ import annotations
 from typing import List, Tuple
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..functions.cleaning import remove_ssml_tags_keep_words
 
@@ -38,123 +38,233 @@ _TAG_RE = r"<[^>]+>"
 SENTENCE_SPLIT_RE = r"(?<=\.|\?|!)\s+"
 
 
-def _finding(df: DataFrame, rule: str, message: Column) -> DataFrame:
-    return df.select(
-        "url", "chunk_number", F.lit(rule).alias("rule"), message.alias("message")
+_FINDINGS = ArrayType(
+    StructType(
+        [StructField("rule", StringType()), StructField("message", StringType())]
+    )
+)
+
+
+def _findings(rule: str, messages: Column) -> Column:
+    """A row's array<string> of messages -> its array<struct<rule, message>>
+    of findings (NULL stays NULL: no match, or a NULL input)."""
+    return F.transform(
+        messages, lambda m: F.struct(F.lit(rule).alias("rule"), m.alias("message"))
     )
 
 
-def rule_punctuation(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def _finding_if(rule: str, cond: Column, message: Column) -> Column:
+    """One finding where ``cond`` holds, else NULL (NULL counts as false)."""
+    return _findings(rule, F.when(cond, F.array(message)))
+
+
+def _concat(findings: list[Column]) -> Column:
+    """Concatenate per-row findings arrays, skipping NULL ones."""
+    return F.flatten(F.filter(F.array(*findings), lambda a: a.isNotNull()))
+
+
+def _explode(chunks: DataFrame, findings: Column) -> DataFrame:
+    """Per-row findings -> one (url, chunk_number, rule, message) row each."""
+    return chunks.select(
+        "url", "chunk_number", F.explode(findings).alias("f")
+    ).select("url", "chunk_number", "f.rule", "f.message")
+
+
+# --- per-row rules: each is ONE column expression over a chunk's ssml --------
+# validate concatenates them into a single projection (one scan, one
+# explode); rule_* explodes its own expression alone.
+
+
+def punctuation_findings(col: str = "ssml") -> Column:
     """Tag immediately followed by .,:; except phoneme/lang
     (ssml_validator.py:32-41)."""
-    matches = F.regexp_extract_all(F.col(col), F.lit(r"(</?[^>]+>)\s*([.,:;])"), F.lit(0))
-    df = chunks.select(
-        "url", "chunk_number", F.explode(matches).alias("m")
-    ).withColumn("tag", F.regexp_extract("m", r"^(</?[^>]+>)", 1))
-    df = df.filter(~F.col("tag").isin(_EXCLUDED_PUNCT_TAGS))
-    return _finding(
-        df,
+    matches = F.regexp_extract_all(
+        F.col(col), F.lit(r"(</?[^>]+>)\s*([.,:;])"), F.lit(0)
+    )
+
+    def tag(m: Column) -> Column:
+        return F.regexp_extract(m, r"^(</?[^>]+>)", 1)
+
+    kept = F.filter(matches, lambda m: ~tag(m).isin(_EXCLUDED_PUNCT_TAGS))
+    return _findings(
         "punctuation",
-        F.concat(
-            F.lit("Suspicious punctuation: '"), F.col("tag"),
-            F.lit("' followed by '"), F.substring(F.col("m"), -1, 1), F.lit("'"),
+        F.transform(
+            kept,
+            lambda m: F.concat(
+                F.lit("Suspicious punctuation: '"), tag(m),
+                F.lit("' followed by '"), F.substring(m, -1, 1), F.lit("'"),
+            ),
         ),
     )
 
 
-def rule_speak_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def speak_tags_findings(col: str = "ssml") -> Column:
     """Exactly one <speak>...</speak>, at start and end
     (ssml_validator.py:71-84)."""
-    opens = F.size(F.split(F.col(col), "<speak>", -1)) - 1
-    closes = F.size(F.split(F.col(col), "</speak>", -1)) - 1
-    stripped = F.trim(F.col(col))
-    df = chunks.withColumn("opens", opens).withColumn("closes", closes)
-    bad_count = df.filter((F.col("opens") != 1) | (F.col("closes") != 1))
-    f1 = _finding(
-        bad_count,
-        "speak_tags",
-        F.concat(
-            F.lit("Incorrect number of <speak> tags. Found "),
-            F.col("opens").cast("string"), F.lit(" opening and "),
-            F.col("closes").cast("string"), F.lit(" closing tags."),
-        ),
-    )
-    ok_count = df.filter((F.col("opens") == 1) & (F.col("closes") == 1))
-    bad_order = ok_count.filter(
-        F.instr(F.col(col), "<speak>") > F.instr(F.col(col), "</speak>")
-    )
-    f2 = _finding(
-        bad_order, "speak_tags",
-        F.lit("Closing </speak> tag appears before opening <speak> tag."),
-    )
-    bad_pos = ok_count.filter(
-        (F.instr(F.col(col), "<speak>") <= F.instr(F.col(col), "</speak>"))
-        & (
-            ~stripped.startswith("<speak>") | ~stripped.endswith("</speak>")
+    c = F.col(col)
+    opens = F.size(F.split(c, "<speak>", -1)) - 1
+    closes = F.size(F.split(c, "</speak>", -1)) - 1
+    open_at, close_at = F.instr(c, "<speak>"), F.instr(c, "</speak>")
+    stripped = F.trim(c)
+    one_each = (opens == 1) & (closes == 1)
+    # the three cases are disjoint: at most one finding per chunk
+    message = (
+        F.when(
+            (opens != 1) | (closes != 1),
+            F.concat(
+                F.lit("Incorrect number of <speak> tags. Found "),
+                opens.cast("string"), F.lit(" opening and "),
+                closes.cast("string"), F.lit(" closing tags."),
+            ),
+        )
+        .when(
+            one_each & (open_at > close_at),
+            F.lit("Closing </speak> tag appears before opening <speak> tag."),
+        )
+        .when(
+            one_each
+            & (open_at <= close_at)
+            & (~stripped.startswith("<speak>") | ~stripped.endswith("</speak>")),
+            F.lit("<speak> tags are not at the start and end of the SSML."),
         )
     )
-    f3 = _finding(
-        bad_pos, "speak_tags",
-        F.lit("<speak> tags are not at the start and end of the SSML."),
-    )
-    return f1.unionByName(f2).unionByName(f3)
+    return _finding_if("speak_tags", message.isNotNull(), message)
 
 
-def rule_non_standard_characters(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def non_standard_characters_findings(col: str = "ssml") -> Column:
     """Non-ASCII outside tags — EVEN tag-split segments only
     (ssml_validator.py:57-69, quirk preserved)."""
-    parts = F.split(F.col(col), _TAG_RE, -1)
-    df = chunks.select(
-        "url", "chunk_number", F.posexplode(parts).alias("j", "part")
-    ).filter(F.col("j") % 2 == 0)
-    runs = F.regexp_extract_all(F.col("part"), F.lit(r"[^\x00-\x7F]+"), F.lit(0))
-    df = df.select("url", "chunk_number", F.explode(runs).alias("run"))
-    return _finding(
-        df,
+    even = F.filter(F.split(F.col(col), _TAG_RE, -1), lambda p, j: j % 2 == 0)
+    runs = F.flatten(
+        F.transform(
+            even, lambda p: F.regexp_extract_all(p, F.lit(r"[^\x00-\x7F]+"), F.lit(0))
+        )
+    )
+    return _findings(
         "non_standard_characters",
-        F.concat(
-            F.lit("Non-standard character(s) found outside tags: '"),
-            F.col("run"), F.lit("'"),
+        F.transform(
+            runs,
+            lambda r: F.concat(
+                F.lit("Non-standard character(s) found outside tags: '"), r, F.lit("'")
+            ),
         ),
     )
 
 
-def rule_misplaced_closing_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def misplaced_closing_tags_findings(col: str = "ssml") -> Column:
     """Closing tag followed by punctuation/paren (ssml_validator.py:151-163)."""
     matches = F.regexp_extract_all(
         F.col(col), F.lit(r"</[^>]+>\s*[(.,:;!?)]"), F.lit(0)
     )
-    df = chunks.select("url", "chunk_number", F.explode(matches).alias("m"))
-    return _finding(
-        df, "misplaced_closing_tags",
-        F.concat(F.lit("Misplaced closing tag detected: '"), F.col("m"), F.lit("'")),
+    return _findings(
+        "misplaced_closing_tags",
+        F.transform(
+            matches,
+            lambda m: F.concat(
+                F.lit("Misplaced closing tag detected: '"), m, F.lit("'")
+            ),
+        ),
     )
 
 
-def rule_malformed_closing_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def malformed_closing_tags_findings(col: str = "ssml") -> Column:
     """Punctuation inside a closing tag (ssml_validator.py:131-149)."""
     matches = F.regexp_extract_all(
         F.col(col), F.lit(r"</\s*(\w+)[^>]*[.,:;!?][^>]*>"), F.lit(0)
     )
-    df = chunks.select("url", "chunk_number", F.explode(matches).alias("m"))
-    return _finding(
-        df, "malformed_closing_tags",
-        F.concat(F.lit("Malformed closing tag detected: '"), F.col("m"), F.lit("'")),
+    return _findings(
+        "malformed_closing_tags",
+        F.transform(
+            matches,
+            lambda m: F.concat(
+                F.lit("Malformed closing tag detected: '"), m, F.lit("'")
+            ),
+        ),
     )
 
 
-def rule_random_single_letters(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def random_single_letters_findings(col: str = "ssml") -> Column:
     """Stray single letters outside tags (ssml_validator.py:165-183); checks
     every non-empty tag-split segment."""
-    parts = F.split(F.col(col), _TAG_RE, -1)
-    df = chunks.select(
-        "url", "chunk_number", F.explode(parts).alias("part")
-    ).filter(F.trim(F.col("part")) != "")
-    hits = F.regexp_extract_all(F.col("part"), F.lit(SINGLE_LETTER_RE), F.lit(0))
-    df = df.select("url", "chunk_number", F.explode(hits).alias("m"))
-    return _finding(
-        df, "random_single_letters",
-        F.concat(F.lit("Random single letter detected: '"), F.col("m"), F.lit("'")),
+    parts = F.filter(F.split(F.col(col), _TAG_RE, -1), lambda p: F.trim(p) != "")
+    hits = F.flatten(
+        F.transform(
+            parts, lambda p: F.regexp_extract_all(p, F.lit(SINGLE_LETTER_RE), F.lit(0))
+        )
+    )
+    return _findings(
+        "random_single_letters",
+        F.transform(
+            hits,
+            lambda m: F.concat(
+                F.lit("Random single letter detected: '"), m, F.lit("'")
+            ),
+        ),
+    )
+
+
+def translation_length_findings(
+    original_col: str = "extracted_text",
+    ssml_col: str = "ssml",
+    low: float = 0.95,
+    high: float = 3.0,
+) -> Column:
+    """EN/LA word-count ratio outside [low, high]
+    (ssml_validator.py:105-129). Word counting = \\b[\\w-]+\\b, and SSML is
+    stripped (<sub> with content removed first) before counting."""
+    word_re = r"\b[\w-]+\b"
+    clean_en = F.regexp_replace(
+        F.regexp_replace(F.col(ssml_col), r"(?s)<\s*sub\s+[^>]*>.*?</\s*sub\s*>", ""),
+        _TAG_RE, "",
+    )
+    latin_words = F.size(F.regexp_extract_all(F.col(original_col), F.lit(word_re), F.lit(0)))
+    english_words = F.size(F.regexp_extract_all(clean_en, F.lit(word_re), F.lit(0)))
+    ratio = F.when(latin_words > 0, english_words / latin_words).otherwise(
+        F.lit(float("inf"))
+    )
+    return _finding_if(
+        "translation_length",
+        (ratio > high) | (ratio < low),
+        F.concat(
+            F.lit("Translation length issue detected. Ratio: "),
+            F.round(ratio, 2).cast("string"),
+        ),
+    )
+
+
+def rule_punctuation(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+    return _explode(chunks, punctuation_findings(col))
+
+
+def rule_speak_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+    return _explode(chunks, speak_tags_findings(col))
+
+
+def rule_non_standard_characters(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+    return _explode(chunks, non_standard_characters_findings(col))
+
+
+def rule_misplaced_closing_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+    return _explode(chunks, misplaced_closing_tags_findings(col))
+
+
+def rule_malformed_closing_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+    return _explode(chunks, malformed_closing_tags_findings(col))
+
+
+def rule_random_single_letters(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+    return _explode(chunks, random_single_letters_findings(col))
+
+
+def rule_translation_length(
+    chunks: DataFrame,
+    original_col: str = "extracted_text",
+    ssml_col: str = "ssml",
+    low: float = 0.95,
+    high: float = 3.0,
+) -> DataFrame:
+    return _explode(
+        chunks, translation_length_findings(original_col, ssml_col, low, high)
     )
 
 
@@ -198,47 +308,10 @@ def rule_duplicates(chunks: DataFrame, col: str = "ssml") -> DataFrame:
         )
         .drop("_i")
     )
-    return _finding(
-        df, "duplicates",
-        F.concat(F.lit("Possible duplicate: '"), F.col("clean_line"), F.lit("'")),
-    )
-
-
-def rule_translation_length(
-    chunks: DataFrame,
-    original_col: str = "extracted_text",
-    ssml_col: str = "ssml",
-    low: float = 0.95,
-    high: float = 3.0,
-) -> DataFrame:
-    """EN/LA word-count ratio outside [low, high]
-    (ssml_validator.py:105-129). Word counting = \\b[\\w-]+\\b, and SSML is
-    stripped (<sub> with content removed first) before counting."""
-    word_re = r"\b[\w-]+\b"
-    clean_en = F.regexp_replace(
-        F.regexp_replace(F.col(ssml_col), r"(?s)<\s*sub\s+[^>]*>.*?</\s*sub\s*>", ""),
-        _TAG_RE, "",
-    )
-    latin_words = F.size(F.regexp_extract_all(F.col(original_col), F.lit(word_re), F.lit(0)))
-    english_words = F.size(F.regexp_extract_all(clean_en, F.lit(word_re), F.lit(0)))
-    df = (
-        chunks.withColumn("latin_words", latin_words)
-        .withColumn("english_words", english_words)
-        .withColumn(
-            "ratio",
-            F.when(
-                F.col("latin_words") > 0,
-                F.col("english_words") / F.col("latin_words"),
-            ).otherwise(F.lit(float("inf"))),
-        )
-        .filter((F.col("ratio") > high) | (F.col("ratio") < low))
-    )
-    return _finding(
-        df, "translation_length",
-        F.concat(
-            F.lit("Translation length issue detected. Ratio: "),
-            F.round("ratio", 2).cast("string"),
-        ),
+    return df.select(
+        "url", "chunk_number", F.lit("duplicates").alias("rule"),
+        F.concat(F.lit("Possible duplicate: '"), F.col("clean_line"), F.lit("'"))
+        .alias("message"),
     )
 
 
@@ -314,34 +387,24 @@ def _udf_rule(fn) -> Column:
 
 def rule_english_word(chunks: DataFrame, col: str = "ssml") -> DataFrame:
     msgs = _udf_rule(_english_word_findings)(F.col(col))
-    df = chunks.select("url", "chunk_number", F.explode(msgs).alias("message"))
-    return _finding(df, "english_word", F.col("message"))
+    return _explode(chunks, _findings("english_word", msgs))
 
 
 def rule_balanced_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
     msgs = _udf_rule(_balanced_findings)(F.col(col))
-    df = chunks.select("url", "chunk_number", F.explode(msgs).alias("message"))
-    return _finding(df, "balanced_tags", F.col("message"))
+    return _explode(chunks, _findings("balanced_tags", msgs))
 
 
 def rule_nested_tags(chunks: DataFrame, col: str = "ssml") -> DataFrame:
     msgs = _udf_rule(_nested_findings)(F.col(col))
-    df = chunks.select("url", "chunk_number", F.explode(msgs).alias("message"))
-    return _finding(df, "nested_tags", F.col("message"))
+    return _explode(chunks, _findings("nested_tags", msgs))
 
 
-def rules_udf_fused(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+def udf_findings(col: str = "ssml") -> Column:
     """The three Python-automaton rules in ONE Arrow round trip (each value
     crosses the JVM<->Python boundary once instead of three times)."""
-    from pyspark.sql.types import StructField, StructType
 
-    schema = ArrayType(
-        StructType(
-            [StructField("rule", StringType()), StructField("message", StringType())]
-        )
-    )
-
-    @F.pandas_udf(schema)
+    @F.pandas_udf(_FINDINGS)
     def fused(s: pd.Series) -> pd.Series:
         def run(t):
             if t is None:
@@ -354,43 +417,36 @@ def rules_udf_fused(chunks: DataFrame, col: str = "ssml") -> DataFrame:
 
         return s.map(run)
 
-    df = chunks.select("url", "chunk_number", F.explode(fused(F.col(col))).alias("f"))
-    return df.select("url", "chunk_number", F.col("f.rule").alias("rule"), F.col("f.message").alias("message"))
+    return fused(F.col(col))
 
 
-ALL_RULES = [
-    rule_punctuation,
-    rule_speak_tags,
-    rule_non_standard_characters,
-    rule_misplaced_closing_tags,
-    rule_malformed_closing_tags,
-    rule_random_single_letters,
-    rule_duplicates,
-    rule_english_word,
-    rule_balanced_tags,
-    rule_nested_tags,
+def rules_udf_fused(chunks: DataFrame, col: str = "ssml") -> DataFrame:
+    return _explode(chunks, udf_findings(col))
+
+
+# the per-row rules validate runs in its one projection; rule_duplicates is
+# corpus-wide (a shuffle) and stays a union branch
+ROW_RULES = [
+    punctuation_findings,
+    speak_tags_findings,
+    non_standard_characters_findings,
+    misplaced_closing_tags_findings,
+    malformed_closing_tags_findings,
+    random_single_letters_findings,
+    udf_findings,
 ]
-
-# the rules rules_udf_fused covers in one Arrow pass; anything else in
-# ALL_RULES (including future additions) runs as its own branch
-_FUSED_UDF_RULES = {rule_english_word, rule_balanced_tags, rule_nested_tags}
 
 
 def validate(chunks: DataFrame, include_translation_length: bool = False) -> DataFrame:
-    """Union of all rule findings (ssml_validator.py:255-270). Native rules
-    union as codegen'd branches; the three UDF rules ride one fused Arrow
-    pass (rules_udf_fused) — identical findings to running them separately.
-    Membership-based, so appending a new rule to ALL_RULES always runs it."""
-    out = None
-    for rule in ALL_RULES:
-        if rule in _FUSED_UDF_RULES:
-            continue
-        f = rule(chunks)
-        out = f if out is None else out.unionByName(f)
-    out = out.unionByName(rules_udf_fused(chunks))
+    """All rule findings (ssml_validator.py:255-270) in one scan of the
+    chunks: every per-row rule is a column expression, concatenated into
+    one array per chunk and exploded once (the native rules codegen'd, the
+    three UDF rules in one Arrow pass); rule_duplicates joins as the only
+    union branch. Identical findings to running each rule_* alone."""
+    per_row = [rule() for rule in ROW_RULES]
     if include_translation_length:
-        out = out.unionByName(rule_translation_length(chunks))
-    return out
+        per_row.append(translation_length_findings())
+    return _explode(chunks, _concat(per_row)).unionByName(rule_duplicates(chunks))
 
 
 # --- pure-python mirrors for tier-1 parity tests ------------------------------

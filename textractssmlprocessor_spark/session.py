@@ -9,7 +9,10 @@ Every knob here is chosen for the 100 TB target, not just local tests:
   verified by pushing a 10 MB document through extract_chunks alongside
   1000 normal ones (5173 chunks, no memory incident);
 - AQE on (runtime coalescing + skew-join splitting for the non-UDF stages);
-- shuffle partitions sized by caller (tests use few; jobs size to cluster).
+- shuffle partitions sized by caller (tests use few; jobs size to cluster);
+- Python workers fork from the engine's daemon (daemon.py), which drops the
+  per-task re-read of pyspark.zip's directory; the package root goes on the
+  workers' PYTHONPATH so the daemon imports from any working directory.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_ARROW_BATCH = 512  # records per Arrow batch through pandas UDFs
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -45,6 +49,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "textractssmlprocessor_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
