@@ -87,3 +87,10 @@ def test_session_selects_the_daemon(spark):
     assert conf.get("spark.python.daemon.module") == daemon.__name__
     root = os.path.dirname(os.path.dirname(os.path.abspath(daemon.__file__)))
     assert root in conf.get("spark.executorEnv.PYTHONPATH").split(os.pathsep)
+
+
+def test_session_sizes_the_codegen_cache(spark):
+    from textractssmlprocessor_spark.session import CODEGEN_CACHE_ENTRIES
+
+    conf = spark.sparkContext.getConf()
+    assert int(conf.get("spark.sql.codegen.cache.maxEntries")) == CODEGEN_CACHE_ENTRIES

@@ -10,6 +10,12 @@ Every knob here is chosen for the 100 TB target, not just local tests:
   1000 normal ones (5173 chunks, no memory incident);
 - AQE on (runtime coalescing + skew-join splitting for the non-UDF stages);
 - shuffle partitions sized by caller (tests use few; jobs size to cluster);
+- a codegen class cache of CODEGEN_CACHE_ENTRIES: one document through
+  extract -> validate -> split -> voices -> SRT generates ~107 distinct
+  classes, so Spark's default of 100 evicted part of them on every request
+  (72-94 Janino recompiles per warm request, the count varying with
+  eviction order); sized above the engine's plans, a warm request
+  compiles 0-15;
 - Python workers fork from the engine's daemon (daemon.py), which drops the
   per-task re-read of pyspark.zip's directory; the package root goes on the
   workers' PYTHONPATH so the daemon imports from any working directory.
@@ -22,6 +28,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_ARROW_BATCH = 512  # records per Arrow batch through pandas UDFs
+CODEGEN_CACHE_ENTRIES = 1000  # compiled classes kept per JVM (Spark: 100)
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -49,6 +56,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.python.daemon.module", "textractssmlprocessor_spark.daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
